@@ -5,9 +5,11 @@ reference with a declarative Spark program:
 
 - z-score standardization (T1, pipeline2.py:492-494): window over the long
   table, ``stddev_pop`` (sklearn StandardScaler ddof=0 semantics).
-- Welch t sufficient statistics (T2, pipeline2.py:598-603): one aggregate
-  pass computes (n, mean, var) per group per key — all keys in one shuffle,
-  replacing the reference's per-gene Python loop.
+- Welch t (T2, pipeline2.py:598-603): one formula over per-group moments
+  (``welch_from_moments``), fed either by one aggregate pass over a long
+  table (``welch_t_stats``) or by row-local moments of dense arrays
+  (``array_mean``/``array_var``) — all keys at once, replacing the
+  reference's per-gene Python loop.
 - Student-t two-sided p-value: vectorized numpy incomplete-beta inside an
   Arrow-batched pandas_udf (scipy is deliberately not a dependency).
 - Benjamini-Hochberg FDR (T3, pipeline2.py:619-627): rank + reverse running
@@ -106,29 +108,76 @@ def welch_t_stats(
         F.var_samp(F.when(is_case, v)).alias("var_case"),
         F.var_samp(F.when(is_control, v)).alias("var_control"),
     )
-    se2 = F.col("var_case") / F.col("n_case") + F.col("var_control") / F.col("n_control")
-    valid = (
-        (F.col("n_case") >= 2)
-        & (F.col("n_control") >= 2)
-        & (se2 > 0)
-        & F.col("var_case").isNotNull()
-        & F.col("var_control").isNotNull()
-    )
+    return agg.select(key, *welch_from_moments())
+
+
+def welch_from_moments() -> list[Column]:
+    """Welch t statistic + Satterthwaite df from per-group moment columns
+    (n_case, n_control, mean_case, mean_control, var_case, var_control;
+    var = sample variance). Returns those count/mean columns plus log2fc,
+    t_stat and t_df. t is NULL where either group has <2 values or both
+    variances are zero (the reference's NaN on scipy failure,
+    pipeline2.py:602-603); log2fc = mean_case - mean_control
+    (pipeline2.py:596 — values are already log2-scale)."""
+    n1, n2 = F.col("n_case"), F.col("n_control")
+    v1, v2 = F.col("var_case"), F.col("var_control")
+    se2 = v1 / n1 + v2 / n2
+    valid = (n1 >= 2) & (n2 >= 2) & (se2 > 0) & v1.isNotNull() & v2.isNotNull()
     t_stat = (F.col("mean_case") - F.col("mean_control")) / F.sqrt(se2)
-    t_df = (se2 * se2) / (
-        (F.col("var_case") / F.col("n_case")) ** 2 / (F.col("n_case") - 1)
-        + (F.col("var_control") / F.col("n_control")) ** 2 / (F.col("n_control") - 1)
-    )
-    return agg.select(
-        key,
-        "n_case",
-        "n_control",
-        "mean_case",
-        "mean_control",
+    t_df = (se2 * se2) / ((v1 / n1) ** 2 / (n1 - 1) + (v2 / n2) ** 2 / (n2 - 1))
+    return [
+        n1,
+        n2,
+        F.col("mean_case"),
+        F.col("mean_control"),
         (F.col("mean_case") - F.col("mean_control")).alias("log2fc"),
         F.when(valid, t_stat).alias("t_stat"),
         F.when(valid, t_df).alias("t_df"),
-    )
+    ]
+
+
+# ---------------------------------------------------------------------------
+# Moments of dense ARRAY<DOUBLE> rows (one row per gene or probe)
+# ---------------------------------------------------------------------------
+
+
+def zip_scalar(arr: Column, scalar: Column, fn) -> Column:
+    """``fn(x, s)`` over the elements x of ``arr`` with a per-row scalar s.
+    The scalar rides in a repeated array, so it is evaluated once per row:
+    a column referenced inside a lambda body gets inlined there by the
+    optimizer and re-evaluated for every element."""
+    return F.zip_with(arr, F.array_repeat(scalar, F.size(arr)), fn)
+
+
+def array_mean(arr: Column) -> Column:
+    """Mean of a dense array; NULL when it is empty."""
+    n = F.size(arr)
+    return F.when(n > 0, F.aggregate(arr, F.lit(0.0), lambda a, x: a + x) / n)
+
+
+def array_var(arr: Column, mean: Column, ddof: int) -> Column:
+    """Two-pass variance of a dense array about its precomputed ``mean``
+    (ddof=0 population, ddof=1 sample); NULL below ddof+1 elements."""
+    n = F.size(arr)
+    sq = zip_scalar(arr, mean, lambda x, m: (x - m) * (x - m))
+    return F.when(n > ddof, F.aggregate(sq, F.lit(0.0), lambda a, d: a + d) / (n - ddof))
+
+
+def array_median(arr: Column) -> Column:
+    """Median of the non-NULL elements of an array, NULL when there are
+    none; an even count averages the two middle values (numpy/pandas). The
+    sorted array is bound once through a one-element transform."""
+
+    def median(s: Column) -> Column:
+        k = F.size(s)
+        h = F.floor(k / 2).cast("int")
+        return (
+            F.when(k == 0, F.lit(None).cast("double"))
+            .when(k % 2 == 1, s[h])
+            .otherwise((s[h - 1] + s[h]) / 2.0)
+        )
+
+    return F.transform(F.array(F.sort_array(F.array_compact(arr))), median)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -9,11 +9,24 @@ trigger 100 (:488-491), corr threshold 0.7 (:708), top 500 genes (:663),
 top 20 validated (:963), drugability weights 0.6/0.4 (:988-991),
 significance adj-p<0.05 & |log2FC|>1 (:639-643).
 
-Scale notes: the expression table is repartitioned by gene once, so the
-NA-filter, imputation, z-score and Welch stages share a single shuffle
-(SURVEY §4); the probe->gene mapping joins broadcast; the correlation
-network is built only after the top-K cut (cardinality reduction before the
-O(K^2) pair space).
+Scale notes: the expression matrix travels as one row per probe carrying a
+dense ``ARRAY<DOUBLE>`` over the samples in header order (after the gene
+collapse, one row per gene). The sample axis is bounded by the study; the
+probe/gene axis is the one that grows, and it is the partitioned one.
+
+- Row-local, no shuffle: the NA filter, median imputation, conditional log2
+  and z-score (stage 2), the case/control split (a positional select), and
+  the Welch moments (stage 4) each read one row. The log2 trigger is the one
+  global aggregate: a single max, broadcast back as one row.
+- One shuffle: the probe->gene collapse (stage 3) joins the mapping
+  broadcast and groups by gene, shuffling one array per mapped probe, then
+  takes the element-wise median per gene.
+- Bounded GEMM: the correlation network is built only after the top-K cut
+  (cardinality reduction before the O(K^2) pair space); the K x samples
+  block is standardised once and r is one matrix product
+  (``operators.correlation.corr_edges``).
+- The differential table (one row per gene) goes through the Arrow t-CDF
+  UDF and the BH window program.
 """
 
 from __future__ import annotations
@@ -21,14 +34,18 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from drug_target_discovery_spark.functions.stats import (
+    array_mean,
+    array_median,
+    array_var,
     bh_fdr,
     minmax_scale,
     student_t_two_sided_p,
-    welch_t_stats,
+    welch_from_moments,
+    zip_scalar,
 )
 from drug_target_discovery_spark.graph.centrality import (
     betweenness_centrality,
@@ -61,73 +78,120 @@ class DrugTargetPipeline:
         self.params = params or PipelineParams()
 
     # ---- stage 2: preprocess (pipeline2.py:476-498) ---------------------
-    def preprocess(self, expr_long: DataFrame) -> DataFrame:
-        """NA-threshold filter (P2) -> per-gene median imputation (A2) ->
-        conditional log2 (P3) -> per-gene z-score (T1, stddev_pop).
+    def preprocess(self, expr: DataFrame) -> DataFrame:
+        """NA-threshold filter (P2) -> per-probe median imputation (A2) ->
+        conditional log2 (P3) -> per-probe z-score (T1, ddof=0).
 
-        One repartition by gene serves the filter, imputation and z-score
-        windows; the global max is a 1-row broadcast."""
+        Row-local over (probe_id, values): no shuffle, no window. The
+        global max behind the log2 trigger is one aggregate, broadcast back
+        as a 1-row table."""
         p = self.params
-        df = expr_long.repartition("probe_id")
-        wg = W.partitionBy("probe_id")
-
-        # P2: keep genes with >= na_threshold present cells
-        df = (
-            df.withColumn("_n_present", F.count("value").over(wg))
-            .withColumn("_n_total", F.count(F.lit(1)).over(wg))
-            .filter(F.col("_n_present") >= p.na_threshold * F.col("_n_total"))
-            .drop("_n_present", "_n_total")
+        v = F.col("values")
+        # P2: keep probes with at least int(na_threshold * samples) present
+        # cells (pandas dropna(thresh=...), pipeline2.py:484-486)
+        kept = expr.filter(
+            F.size(F.array_compact(v)) >= F.floor(F.lit(p.na_threshold) * F.size(v))
         )
-        # A2: median-impute missing cells within gene
-        df = df.withColumn("value", F.coalesce("value", F.median("value").over(wg)))
+        # A2: median-impute missing cells within the probe
+        imputed = kept.select(
+            "probe_id",
+            zip_scalar(v, array_median(v), lambda x, m: F.coalesce(x, m)).alias("values"),
+        )
         # P3: conditional log2(x+1) on a broadcast global max
-        gmax = df.agg(F.max("value").alias("_gmax"))
-        df = (
-            df.crossJoin(F.broadcast(gmax))
-            .withColumn(
-                "value",
-                F.when(F.col("_gmax") > p.log2_trigger, F.log2(F.col("value") + 1)).otherwise(
-                    F.col("value")
-                ),
+        gmax = imputed.agg(F.max(F.array_max("values")).alias("_gmax"))
+        logged = imputed.crossJoin(F.broadcast(gmax)).select(
+            "probe_id",
+            F.when(
+                F.col("_gmax") > p.log2_trigger, F.transform(v, lambda x: F.log2(x + 1))
             )
-            .drop("_gmax")
+            .otherwise(v)
+            .alias("values"),
         )
-        # T1: z-score per gene, population stddev (sklearn ddof=0)
-        mu = F.avg("value").over(wg)
-        sd = F.stddev_pop("value").over(wg)
-        return df.withColumn(
-            "value", F.when(sd == 0.0, F.lit(0.0)).otherwise((F.col("value") - mu) / sd)
+        # T1: z-score per probe, population stddev (sklearn ddof=0). A
+        # constant probe (max == min; its float mean need not equal its
+        # value) and a probe with no value at all standardise to 0.0.
+        stats = logged.select(
+            "probe_id",
+            "values",
+            array_mean(v).alias("_mu"),
+            F.coalesce(F.array_max(v) == F.array_min(v), F.lit(True)).alias("_flat"),
+        )
+        mu = F.col("_mu")
+        scale = F.struct(mu.alias("mu"), F.sqrt(array_var(v, mu, 0)).alias("sd"))
+        return stats.select(
+            "probe_id",
+            F.when(F.col("_flat"), F.transform(v, lambda x: F.lit(0.0)))
+            .otherwise(zip_scalar(v, scale, lambda x, s: (x - s["mu"]) / s["sd"]))
+            .alias("values"),
         )
 
     # ---- stage 3: probe -> gene (pipeline2.py:500-538) ------------------
-    def map_probes_to_genes(self, expr_long: DataFrame, mapping: DataFrame) -> DataFrame:
-        """Broadcast left join (J1) + unmapped filter (P4: the reference's
-        UNKNOWN_ sentinel is just a NULL marker) + per-gene-sample exact
-        median collapse of multi-probe genes (A1)."""
-        joined = expr_long.join(F.broadcast(mapping), "probe_id", "left")
-        mapped = joined.filter(F.col("gene_symbol").isNotNull())
-        return (
-            mapped.groupBy(F.col("gene_symbol").alias("gene"), "sample_id")
-            .agg(F.median("value").alias("value"))
+    def map_probes_to_genes(self, expr: DataFrame, mapping: DataFrame) -> DataFrame:
+        """Broadcast join (J1; unmapped probes drop out — the reference's
+        UNKNOWN_ sentinel is just a NULL marker, P4) + per-gene element-wise
+        exact median over the gene's probe vectors (A1). The group-by is the
+        chain's only shuffle: one array per mapped probe."""
+        probes = (
+            expr.join(F.broadcast(mapping), "probe_id")
+            .groupBy(F.col("gene_symbol").alias("gene"))
+            .agg(F.collect_list("values").alias("_probes"))
+        )
+        first = F.col("_probes")[0]
+        return probes.select(
+            "gene",
+            F.when(F.size("_probes") == 1, first)
+            .otherwise(
+                F.transform(
+                    first,
+                    lambda _, i: array_median(F.transform("_probes", lambda a: a[i])),
+                )
+            )
+            .alias("values"),
         )
 
     # ---- sample reconciliation (J2, pipeline2.py:361-389) ---------------
-    def attach_condition(self, gene_long: DataFrame, meta: DataFrame) -> DataFrame:
-        """Inner join on normalized sample_id: only samples present in both
-        tables and carrying a condition survive (the reference's
-        set-intersection)."""
-        cond = meta.select(
-            F.trim(F.regexp_replace("sample_id", r'^["\']|["\']$', "")).alias("sample_id"),
-            "condition",
-        ).filter(F.col("condition").isNotNull())
-        return gene_long.join(F.broadcast(cond), "sample_id", "inner")
+    def attach_condition(self, gene_vec: DataFrame, meta: DataFrame) -> DataFrame:
+        """(gene, case, control): the case and control samples picked out
+        of each gene's vector by their positions, header order kept. Only
+        samples present in both tables and carrying a condition survive
+        (the reference's set-intersection)."""
+        picked = {"case": set(), "control": set()}
+        for r in meta.select("position", "condition").collect():
+            if r["position"] is not None and r["condition"] in picked:
+                picked[r["condition"]].add(r["position"])
+
+        def select(positions: set[int]):
+            cells = [F.col("values")[i] for i in sorted(positions)]
+            return F.array(*cells) if cells else F.array().cast("array<double>")
+
+        return gene_vec.select(
+            "gene",
+            select(picked["case"]).alias("case"),
+            select(picked["control"]).alias("control"),
+        )
 
     # ---- stage 4: differential expression (pipeline2.py:540-661) --------
     def differential_expression(self, gene_cond: DataFrame) -> DataFrame:
-        """Welch t per gene from sufficient statistics (T2) -> two-sided p
+        """Welch t per gene from row-local array moments (T2) -> two-sided p
         (Arrow-batched t CDF) -> BH-FDR (T3) -> (gene, log2FC, pvalue,
-        adjusted_pvalue). One aggregation shuffle for every gene."""
-        t = welch_t_stats(gene_cond, "gene", "value", "condition", "case", "control")
+        adjusted_pvalue)."""
+        means = gene_cond.select(
+            "gene",
+            "case",
+            "control",
+            array_mean(F.col("case")).alias("mean_case"),
+            array_mean(F.col("control")).alias("mean_control"),
+        )
+        moments = means.select(
+            "gene",
+            F.size("case").alias("n_case"),
+            F.size("control").alias("n_control"),
+            "mean_case",
+            "mean_control",
+            array_var(F.col("case"), F.col("mean_case"), 1).alias("var_case"),
+            array_var(F.col("control"), F.col("mean_control"), 1).alias("var_control"),
+        )
+        t = moments.select("gene", *welch_from_moments())
         withp = t.withColumn("pvalue", student_t_two_sided_p("t_stat", "t_df"))
         adj = bh_fdr(withp, "pvalue", "adjusted_pvalue")
         return adj.select(
@@ -162,10 +226,11 @@ class DrugTargetPipeline:
         sig = significant.select("gene").orderBy("gene").limit(p.n_top_genes)
         if sig.take(1):
             return sig
+        vals = gene_cond.select("gene", F.concat("case", "control").alias("_x"))
+        x = F.col("_x")
         return (
-            gene_cond.groupBy("gene")
-            .agg(F.var_samp("value").alias("_v"), F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
+            vals.select("gene", array_var(x, array_mean(x), 1).alias("_v"))
+            .filter(F.col("_v").isNotNull())
             .orderBy(F.desc("_v"), F.asc("gene"))
             .limit(p.n_top_genes)
             .select("gene")
@@ -175,11 +240,13 @@ class DrugTargetPipeline:
         self, gene_cond: DataFrame, top_genes: DataFrame
     ) -> tuple[DataFrame, DataFrame]:
         """(nodes, edges): restrict to top genes (broadcast semi-join),
-        pairwise Pearson over samples, |r| > threshold (A7+P7+G1)."""
+        Pearson over the conditioned samples, |r| > threshold (A7+P7+G1)."""
         p = self.params
-        sub = gene_cond.join(F.broadcast(top_genes), "gene", "left_semi")
+        sub = gene_cond.join(F.broadcast(top_genes), "gene", "left_semi").select(
+            "gene", F.concat("case", "control").alias("values")
+        )
         edges = corr_edges(
-            sub, "gene", "sample_id", "value",
+            sub, "gene", "values",
             threshold=p.corr_threshold, min_periods=p.corr_min_periods,
         )
         nodes = top_genes.select(F.col("gene").alias("node"))
@@ -297,36 +364,37 @@ class DrugTargetPipeline:
     # ---- full chain ------------------------------------------------------
     def run(
         self,
-        expr_long: DataFrame,
+        expr: DataFrame,
         meta: DataFrame,
         mapping: DataFrame,
         client: Callable[[str], tuple[int, float]] | None = None,
     ) -> dict[str, DataFrame]:
         """Stages 2-7 composed; returns every intermediate (the reference
-        writes each to CSV — S5 — callers can sink whichever they need)."""
-        normalized = self.preprocess(expr_long)
-        gene_long = self.map_probes_to_genes(normalized, mapping)
+        writes each to CSV — S5 — callers can sink whichever they need).
+        ``normalized`` is (probe_id, values) and ``gene_expression`` is
+        (gene, case, control), both array-valued."""
+        normalized = self.preprocess(expr)
+        gene_vec = self.map_probes_to_genes(normalized, mapping)
         from drug_target_discovery_spark.caching import fixture_cache
 
         # the four caches below back every returned DataFrame (and the
         # registry's memoized pipeline outputs) — sweep-scoped: released by
         # caching.release_caches(fixtures=True)
-        gene_cond = fixture_cache(self.attach_condition(gene_long, meta))
-        # cache the differential table: it is one row per gene (bounded far
-        # below the input long table) and every downstream stage re-derives
+        gene_cond = fixture_cache(self.attach_condition(gene_vec, meta))
+        # cache the differential table: it is one row per gene and every
+        # downstream stage re-derives
         # from it — the significance probe (take(1)), the top-K cut, and each
         # centrality's node actions would otherwise re-execute the Welch +
         # BH + t-CDF chain once per action
         diff = fixture_cache(self.differential_expression(gene_cond))
         sig = self.significant_genes(diff)
         # top is <= n_top_genes rows by construction: cache so the three
-        # centralities and the corr self-join all reuse one materialization
+        # centralities and the correlation block all reuse one materialization
         top = fixture_cache(self.select_network_genes(gene_cond, sig))
         nodes, edges = self.build_network(gene_cond, top)
         # the edge list is small by construction (<= n_top_genes^2 thresholded
         # pairs) and every downstream consumer — three centralities, the
-        # composite join, the sink — re-reads it: cache once here so the
-        # corr self-join never re-executes
+        # composite join, the sink — re-reads it: cache once here
         edges = fixture_cache(edges)
         scores = self.score_targets(nodes, edges)
         out = {

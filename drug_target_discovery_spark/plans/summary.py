@@ -32,7 +32,8 @@ def render_pipeline_summary(spark: SparkSession) -> str:
     gene_cond = out["gene_cond"]
     diff = out["differential"]
 
-    n_samples = gene_cond.select("sample_id").distinct().count()
+    first = gene_cond.select((F.size("case") + F.size("control")).alias("n")).first()
+    n_samples = first["n"] if first else 0
     n_genes = diff.count()
     sig = _sig_counts(diff)
     n_nodes = out["network_nodes"].count()

@@ -20,7 +20,7 @@ from drug_target_discovery_spark.graph.centrality import (
     eigenvector_centrality,
 )
 from drug_target_discovery_spark.graph.algorithms import triangle_counts
-from drug_target_discovery_spark.operators.correlation import corr_edges
+from drug_target_discovery_spark.operators.correlation import pairwise_pearson
 from drug_target_discovery_spark.queries.registry import register
 from drug_target_discovery_spark.sources.tables import load_table
 
@@ -76,6 +76,17 @@ def _cell_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, F.col("o_custkey") == cust.c_custkey)
         .groupBy(F.col("l_partkey").alias("g"), F.col("c_nationkey").alias("s"))
         .agg(F.avg("l_quantity").alias("v"))
+    )
+
+
+def _corr_edges(long_df: DataFrame) -> DataFrame:
+    """Thresholded Pearson edges (g1, g2, weight, r, n_samples) over the
+    (g, s, v) cells: each pair correlates over its own common samples, so
+    the long-form self-join (not the dense GEMM) is the kernel here. NULL r
+    (a constant series) never passes."""
+    r = pairwise_pearson(long_df, "g", "s", "v", MIN_PERIODS)
+    return r.filter(F.col("r").isNotNull() & (F.abs("r") > CORR_THRESHOLD)).select(
+        "g1", "g2", F.abs("r").alias("weight"), "r", "n_samples"
     )
 
 
@@ -157,7 +168,7 @@ def _corr_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     g_type = dict(cell.dtypes)["g"]
     nodes = spark.createDataFrame([(v,) for v in top_vals], f"node {g_type}")
     sub = cell.filter(F.col("g").isin(top_vals)) if top_vals else cell.filter(F.lit(False))
-    edges = corr_edges(sub, "g", "s", "v", threshold=CORR_THRESHOLD, min_periods=MIN_PERIODS)
+    edges = _corr_edges(sub)
     # checkpoint, not cache (optimization r14): ~12 graph consumers embed
     # this memo's lineage (cell matrix join + pairwise corr) in their own
     # plans otherwise; as a LogicalRDD leaf their plan-build cost stops
@@ -478,9 +489,7 @@ def spearman_edges_top_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rk", F.avg("rn").over(W.partitionBy("g", "v")))
         .select("g", "s", F.col("rk").alias("v"))
     )
-    edges = corr_edges(
-        ranked, "g", "s", "v", threshold=CORR_THRESHOLD, min_periods=MIN_PERIODS
-    )
+    edges = _corr_edges(ranked)
     return edges.select("g1", "g2", rnd("r", 6).alias("rho"), "n_samples")
 
 

@@ -10,6 +10,9 @@ chosen to also be correct on a 1000-executor cluster:
 - UTC session timezone — deterministic event-time semantics regardless of host.
 - shuffle partitions default to the local core count; on a real cluster this
   would be set to ~2-3x total cores (or left to AQE's initialPartitionNum).
+- driver heap sized to the host: half of physical memory, at most 48g
+  (``$SPARK_DRIVER_MEMORY`` overrides). In local mode the driver JVM is the
+  whole engine, and the Python workers live beside it.
 """
 
 from __future__ import annotations
@@ -17,6 +20,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of MemTotal (from /proc/meminfo) to the nearest GiB, capped at 48g;
+    48g where /proc/meminfo is unavailable."""
+    cap = 48
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{cap}g"
+    return f"{max(1, min(cap, round(kib / 2 / (1 << 20))))}g"
 
 
 def get_spark(
@@ -50,7 +65,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # vectorized parquet reader + pushdown are on by default; pin anyway
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -10,16 +10,22 @@ Format (one file, three zones):
 Distributed-safety (SURVEY §7.4 hard part #4): row interpretation depends on
 the header discovered mid-file, so parsing is two-pass —
 pass 1 collects ONLY the ``!``-metadata + header lines (O(#samples), tiny);
-pass 2 streams the data rows through split + posexplode with the sample-id
-header broadcast as a literal array. gzip is decoded transparently by
-extension (``spark.read.text``), fixing the reference's gzip-unaware second
-read (pipeline2.py:222).
+pass 2 streams the data rows through split + cast, one output row per input
+line. gzip is decoded transparently by extension (``spark.read.text``),
+fixing the reference's gzip-unaware second read (pipeline2.py:222).
 
-Output is engine-native LONG format (probe_id, sample_id, value) — wide
-per-sample columns do not scale (SURVEY §1.1).
+Output is one row per probe carrying its values as a dense
+``ARRAY<DOUBLE>`` in header sample order — the genes x samples matrix the
+reference holds as a pandas frame, partitioned by rows. The sample axis is
+bounded by the study (tens to a few thousand arrays), the probe axis is the
+one that grows, so every per-probe stage downstream is row-local and the
+matrix never explodes into one row per cell. ``meta`` carries each
+sample's array position, which is how samples are addressed from then on.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,24 +36,41 @@ CANCER_KEYWORDS = ["cancer", "tumor", "tumour", "malignant", "carcinoma", "adeno
 BENIGN_KEYWORDS = ["normal", "benign", "healthy", "control", "non-tumor", "nontumor"]
 
 
+_QUOTE_RE = r'^["\']|["\']$'
+
+
 def _strip_quotes(c):
-    return F.regexp_replace(c, r'^["\']|["\']$', "")
+    return F.regexp_replace(c, _QUOTE_RE, "")
+
+
+def _missing(v):
+    """An NA cell: empty, or one of the NA spellings."""
+    return (v == "") | F.upper(v).isin("NA", "NAN", "NULL")
+
+
+def _sample_key(s: str) -> str:
+    """Sample-id normalisation: one surrounding quote stripped, then trim."""
+    return re.sub(_QUOTE_RE, "", s).strip()
 
 
 def parse_geo_series_matrix(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Parse a GEO Series Matrix file -> (expression_long, sample_metadata).
+    """Parse a GEO Series Matrix file -> (expression, sample_metadata).
 
-    expression_long: (probe_id STRING, sample_id STRING, value DOUBLE) —
-      NULL value for empty/NA cells; rows with any unparseable non-empty
-      cell are dropped whole (the reference's skip-on-ValueError,
-      pipeline2.py:464-468). Probe decorations are stripped: surrounding
-      quotes, then a numeric ``NNN:`` prefix (pipeline2.py:450-456).
+    expression: (probe_id STRING, values ARRAY<DOUBLE>), one row per probe,
+      one element per data column in header order. NULL elements for
+      empty/NA cells and for the missing trailing cells of a short row, so
+      every array has the header's length and a cell never shifts to
+      another sample. Rows with any unparseable non-empty cell are dropped
+      whole (the reference's skip-on-ValueError, pipeline2.py:464-468).
+      Probe decorations are stripped: surrounding quotes, then a numeric
+      ``NNN:`` prefix (pipeline2.py:450-456).
     sample_metadata: (sample_id, title, characteristics MAP<STRING,STRING>,
-      condition) with condition in ('case','control', NULL) via the tiered
-      keyword cascade (tissue characteristic -> title -> all
-      characteristics)."""
+      position INT, condition) with condition in ('case','control', NULL)
+      via the tiered keyword cascade (tissue characteristic -> title -> all
+      characteristics) and position the sample's 0-based index into
+      ``values`` (NULL when the data zone has no column for it)."""
     lines = spark.read.text(path).select(F.col("value").alias("line"))
 
     # ---- pass 1: metadata + header (tiny, collected) -------------------
@@ -79,6 +102,22 @@ def parse_geo_series_matrix(
     if not sample_ids:
         raise ValueError(f"no !Sample_geo_accession line in {path}")
 
+    # data columns are labelled by the accession line, unless the header's
+    # own id count disagrees with it (positional fallback, J3): then the
+    # header's ids label the columns and samples are matched to them by id
+    if header_like:
+        header_cols = [c.strip().strip('"') for c in header_like[0]["line"].split("\t")][1:]
+    else:
+        header_cols = sample_ids
+    if len(header_cols) == len(sample_ids):
+        positions = list(range(len(sample_ids)))
+    else:
+        first: dict[str, int] = {}
+        for j, c in enumerate(header_cols):
+            first.setdefault(_sample_key(c), j)
+        positions = [first.get(_sample_key(sid)) for sid in sample_ids]
+    n_cols = len(header_cols)
+
     meta_pdf = []
     for i, sid in enumerate(sample_ids):
         chars = {}
@@ -92,13 +131,15 @@ def parse_geo_series_matrix(
                     chars[v.strip().lower()] = ""
         meta_pdf.append(
             (
-                sid,
+                _sample_key(sid),
                 titles[i] if i < len(titles) else None,
                 chars,
+                positions[i],
             )
         )
     meta = spark.createDataFrame(
-        meta_pdf, "sample_id STRING, title STRING, characteristics MAP<STRING,STRING>"
+        meta_pdf,
+        "sample_id STRING, title STRING, characteristics MAP<STRING,STRING>, position INT",
     )
     meta = classify_condition(meta)
 
@@ -110,14 +151,6 @@ def parse_geo_series_matrix(
         & ~F.col("line").rlike(r'^\s*$')
         & ~F.col("line").startswith("#")
     )
-    if header_like:
-        header_cols = [c.strip().strip('"') for c in header_like[0]["line"].split("\t")][1:]
-    else:
-        header_cols = sample_ids
-    if len(header_cols) != len(sample_ids):
-        # positional fallback (J3): trust the header's own ids
-        sample_ids = header_cols
-
     rows = data.filter(_strip_quotes(F.split("line", "\t").getItem(0)) != "ID_REF")
     parts = F.split("line", "\t")
     probe = _strip_quotes(parts.getItem(0))
@@ -125,40 +158,42 @@ def parse_geo_series_matrix(
     probe = F.regexp_replace(probe, r"^\d+[:-]", "")
     probe = _strip_quotes(probe)
 
-    vals = F.slice(parts, 2, len(sample_ids))
-    cleaned = F.transform(vals, lambda v: _strip_quotes(F.trim(v)))
+    # one projection per step: each array below is read more than once,
+    # and the optimizer keeps a projection of non-trivial expressions
+    # rather than evaluating them once per reference
+    raw = rows.select(
+        probe.alias("probe_id"),
+        F.transform(F.slice(parts, 2, n_cols), lambda v: _strip_quotes(F.trim(v))).alias("_raw"),
+    )
     # try_cast, not cast: ANSI mode (Spark 4 default) would otherwise throw
-    # inside fused filter predicates before row pruning applies — and NULL-on-
-    # malformed is exactly the reference's skip-row detection signal anyway
-    casted = F.transform(
-        cleaned,
-        lambda v: F.when(
-            (v == "") | (F.upper(v).isin("NA", "NAN", "NULL")), F.lit(None).cast("double")
-        ).otherwise(v.try_cast("double")),
+    # on a malformed cell — and NULL-on-malformed is exactly the reference's
+    # skip-row detection signal anyway
+    cells = raw.select(
+        "probe_id",
+        "_raw",
+        F.transform(
+            "_raw",
+            lambda v: F.when(_missing(v), F.lit(None).cast("double")).otherwise(
+                v.try_cast("double")
+            ),
+        ).alias("_vals"),
     )
     # reference semantics: any non-missing cell failing float() drops the row
     bad = F.exists(
-        F.zip_with(
-            cleaned,
-            casted,
-            lambda raw, c: (raw != "")
-            & ~F.upper(raw).isin("NA", "NAN", "NULL")
-            & c.isNull(),
-        ),
-        lambda x: x,
+        F.zip_with("_raw", "_vals", lambda r, c: c.isNull() & ~_missing(r)), lambda x: x
     )
-    sample_arr = F.array(*[F.lit(s) for s in sample_ids])
-    long_df = (
-        rows.select(probe.alias("probe_id"), casted.alias("_vals"))
-        .filter(~bad)
-        .select("probe_id", F.posexplode("_vals").alias("_pos", "value"))
-        .select(
-            "probe_id",
-            F.element_at(sample_arr, F.col("_pos") + 1).alias("sample_id"),
-            "value",
-        )
+    # a short row's missing trailing cells are NA cells of the samples
+    # they belong to
+    padded = F.concat(
+        "_vals",
+        F.array_repeat(F.lit(None).cast("double"), F.lit(n_cols) - F.size("_vals")),
     )
-    return long_df, meta
+    # the row drop is a generator (zero or one vector per line), not a
+    # filter: a filter is pushed below the projections above, which would
+    # then evaluate the per-cell transforms once in it and again after it
+    # (and so would every later filter on ``values``)
+    keep = F.when(bad, F.array()).otherwise(F.array(padded))
+    return cells.select("probe_id", F.explode(keep).alias("values")), meta
 
 
 def classify_condition(meta: DataFrame) -> DataFrame:

@@ -49,13 +49,17 @@ class TestGeoPipeline:
     def test_parse(self, spark, fixture_paths):
         matrix_path, map_path, vals, info = fixture_paths
         expr, meta = parse_geo_series_matrix(spark, matrix_path)
-        n_cells = expr.count()
-        # every (probe, sample) cell lands exactly once
-        assert n_cells == N_PROBES * N_SAMPLES
+        rows = {r["probe_id"]: r["values"] for r in expr.collect()}
+        # every (probe, sample) cell lands exactly once: one row per probe,
+        # one array element per sample, at the sample's header position
+        assert len(rows) == expr.count() == N_PROBES
+        assert all(len(v) == N_SAMPLES for v in rows.values())
+        for probe, want in vals.iterrows():
+            assert rows[probe] == [None if np.isnan(x) else x for x in want], probe
         m = {r["sample_id"]: r["condition"] for r in meta.collect()}
         assert m == info["condition"]
         # NULL cells arrive as NULLs
-        n_null = expr.filter("value IS NULL").count()
+        n_null = sum(x is None for v in rows.values() for x in v)
         assert n_null == 3 + (N_SAMPLES - 2)
 
     def test_full_pipeline_matches_reference(self, spark, fixture_paths):

@@ -32,7 +32,11 @@ def reference_compute(
     if df.max().max() > params.log2_trigger:
         df = np.log2(df + 1)  # :488-491
     mu, sd = df.mean(axis=1), df.std(axis=1, ddof=0)
-    df = df.sub(mu, axis=0).div(sd.replace(0, np.nan), axis=0).fillna(0.0)  # :492-494
+    # a constant row standardises to 0 (StandardScaler's zero-variance
+    # rule); it is told by max == min, since its float mean may miss the
+    # value by an ulp and leave sd a tiny non-zero
+    flat = df.max(axis=1) == df.min(axis=1)
+    df = df.sub(mu, axis=0).div(sd.mask(flat), axis=0).fillna(0.0)  # :492-494
 
     df = df[df.index.isin(mapping)]
     df2 = df.copy()
@@ -57,14 +61,18 @@ def reference_compute(
         rows.append((g, lfc, p))
     diff = pd.DataFrame(rows, columns=["gene", "log2FC", "pvalue"]).set_index("gene")
 
-    diff["adjusted_pvalue"] = bh_adjust(diff["pvalue"].to_numpy())
+    diff["adjusted_pvalue"] = bh_adjust(diff["pvalue"].to_numpy(dtype=np.float64))
 
     sig = diff[
         (diff["adjusted_pvalue"] < params.p_threshold)
         & (diff["log2FC"].abs() > params.fc_threshold)
         & diff["log2FC"].notna()
     ]
-    top = sorted(sig.index)[: params.n_top_genes]
+    if len(sig):
+        top = sorted(sig.index)[: params.n_top_genes]
+    else:  # nothing significant: top-K by variance (pipeline2.py:683-686)
+        var = gene_df.var(axis=1, ddof=1).dropna()
+        top = sorted(var.index, key=lambda g: (-var[g], g))[: params.n_top_genes]
     corr = gene_df.loc[top].T.corr()
     g = nx.Graph()
     g.add_nodes_from(top)
@@ -81,7 +89,7 @@ def reference_compute(
 
     def scale(d):
         v = np.array([d[k] for k in top])
-        lo, hi = v.min(), v.max()
+        lo, hi = (v.min(), v.max()) if len(v) else (0.0, 0.0)
         return {k: (0.0 if hi == lo else (d[k] - lo) / (hi - lo)) for k in top}
 
     dcs, bcs, ecs = scale(dc), scale(bc), scale(ec)
